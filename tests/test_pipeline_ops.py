@@ -1210,6 +1210,35 @@ def test_bpe_tokenize_emit_ids_equals_encode_ids(spark):
         bpe_tokenize(docs, merges, emit_ids=True)
 
 
+def test_emit_ids_rejects_colliding_merge_products(spark):
+    """Two merges minting the same product string would share one token
+    id; both emit_ids paths must refuse such a table at build time
+    instead of emitting ambiguous ids."""
+    import pytest
+
+    from vinum_spark.operators.text import (
+        _BYTE_SYM_BASE,
+        _merges_frame,
+        bpe_tokenize,
+        bpe_tokenize_map_side,
+    )
+
+    a, b, c = (chr(_BYTE_SYM_BASE + ord(ch)) for ch in "abc")
+    # (a, bc) and (ab, c) both mint "abc"
+    merges = _merges_frame(
+        spark, [(1, b, c, 9), (2, a, b, 8), (3, a, b + c, 7), (4, a + b, c, 6)]
+    )
+    docs = spark.createDataFrame([(1, "abc abc")], "doc_id long, text string")
+    kw = {"byte_level": True, "token_pattern": "[^ ]+", "emit_ids": True}
+    for op in (bpe_tokenize, bpe_tokenize_map_side):
+        with pytest.raises(ValueError, match="collide"):
+            op(docs, merges, **kw)
+    # the same table without the colliding merge is accepted
+    ok = _merges_frame(spark, [(1, b, c, 9), (2, a, b, 8), (3, a, b + c, 7)])
+    got = bpe_tokenize(docs, ok, **kw).collect()[0]["token_ids"]
+    assert got == [256 + 2, 256 + 2]
+
+
 def test_prepare_corpus_tokenize_stage(spark):
     """tokenize_with adds the tokenizer as the pipeline's final stage —
     a pure projection (no extra shuffle, no join-back), byte-level

@@ -554,7 +554,7 @@ def test_bucketed_store_delta_join_is_delta_sized(spark, tmp_path):
 
 def test_semantic_dedup_edges_are_grouped_blas_kernel(spark):
     """semantic_dedup's 100 TB contract: within-cluster pairs come
-    from the per-cluster Gram kernel — ONE FlatMapGroupsInPandas over
+    from the per-cluster Gram kernel — ONE FlatMapGroupsInArrow over
     a single hash Exchange on the cluster id; never a
     BroadcastNestedLoopJoin or cartesian product
     (all-pairs-by-accident), and never the retired pair-expression
@@ -580,7 +580,7 @@ def test_semantic_dedup_edges_are_grouped_blas_kernel(spark):
     )
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
     import re as _re
 
     # ONE Exchange: the groupBy's hash partitioning on the cluster id
@@ -594,3 +594,13 @@ def test_semantic_dedup_edges_are_grouped_blas_kernel(spark):
     )
     assert "BroadcastNestedLoopJoin" not in full, full
     assert "CartesianProduct" not in full, full
+
+
+def test_knn_join_is_one_grouped_arrow_kernel(spark):
+    """knn_join's scale contract: the block-bucket top-k is ONE
+    FlatMapGroupsInArrow (the shared Gram kernel) — never a
+    BroadcastNestedLoopJoin or cartesian product of queries × corpus."""
+    plan = plan_of(spark, "q78_knn_join", "simple")
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan

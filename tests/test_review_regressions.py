@@ -494,18 +494,24 @@ def test_no_cross_call_persist_retention(spark):
         )
 
 
-def test_pair_cosine_kernel_validates_dim_and_element_nulls():
-    """Round-19 review: the Arrow pair kernel must reject (a) input
-    whose total element count happens to divide evenly by the row
-    count while rows are individually ragged (one short + one long —
-    invisible to a divisibility check, silently misaligning every
-    cosine in the block), enforced via the caller-declared dim, and
-    (b) element-LEVEL nulls, which pass the top-level null_count check
-    and would otherwise turn into NaN cosines that silently drop
-    pairs. Direct kernel-level tests — no Spark needed."""
+def test_pair_cosine_kernel_validates_dim_and_element_nulls(spark):
+    """One bad-vector contract for every embedding-cosine operator
+    (README "Embedding vector contract"). Kernel level: the shared Gram
+    kernel must reject (a) rows that are individually ragged while the
+    total element count still divides evenly (one short + one long),
+    enforced via the declared dim, and (b) element-LEVEL nulls, which a
+    top-level null check misses. Operator level: a NULL, ragged,
+    element-NULL or zero-norm vector added to a clean corpus must give
+    each operator's documented raise, drop or no-match result."""
     import pyarrow as pa
 
-    from vinum_spark.operators.similarity import _pair_cosine_kernel
+    from vinum_spark.operators.similarity import (
+        _gram_kernel,
+        blocked_pair_cosine,
+        knn_join,
+        lsh_blocked_cosine_pairs,
+        semantic_dedup,
+    )
 
     def tbl(vectors):
         n = len(vectors)
@@ -519,18 +525,96 @@ def test_pair_cosine_kernel_validates_dim_and_element_nulls():
             }
         )
 
+    kernel = _gram_kernel(
+        "pairs", "id_a long, id_b long, cosine double", threshold=0.9,
+        dim=2, who="blocked_pair_cosine", invalid="raise",
+    )
     # happy path: declared dim, exact duplicate pair found
-    good = _pair_cosine_kernel(0.9, 2)(tbl([[1.0, 0.0], [1.0, 0.0]]))
+    good = kernel(tbl([[1.0, 0.0], [1.0, 0.0]]))
     assert good.num_rows == 1 and good.column("cosine")[0].as_py() == 1.0
-
     # offsetting ragged rows: 1 + 3 elements over 2 rows divides evenly
     # by n — only the dim check can catch it
     with pytest.raises(ValueError, match="ragged|dim"):
-        _pair_cosine_kernel(0.9, 2)(tbl([[1.0], [0.0, 1.0, 2.0]]))
-
+        kernel(tbl([[1.0], [0.0, 1.0, 2.0]]))
     # element-level null inside a list: top-level null_count is 0
     with pytest.raises(ValueError, match="null element"):
-        _pair_cosine_kernel(0.9, 2)(tbl([[1.0, None], [1.0, 0.0]]))
+        kernel(tbl([[1.0, None], [1.0, 0.0]]))
+
+    schema = "vec_id long, embedding array<float>"
+    clean = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [1.0, 0.01, 0.0, 0.0]),
+        (3, [0.0, 1.0, 0.0, 0.0]),
+        (4, [0.0, 1.0, 0.02, 0.0]),
+    ]
+    bad_kinds = {
+        "NULL": None,
+        "ragged": [1.0, 0.0, 0.0],
+        "null element": [1.0, None, 0.0, 0.0],
+        "zero-norm": [0.0, 0.0, 0.0, 0.0],
+    }
+    ops = {
+        "blocked_pair_cosine": lambda df: {
+            tuple(r) for r in blocked_pair_cosine(df, -1.0, n_blocks=2)
+            .select("id_a", "id_b").collect()
+        },
+        "lsh_blocked_cosine_pairs": lambda df: {
+            tuple(r) for r in lsh_blocked_cosine_pairs(
+                df, 4, -1.0, n_planes=2, band_bits=1
+            ).select("id_a", "id_b").collect()
+        },
+        "knn_join": lambda df: {
+            tuple(r) for r in knn_join(df, df, k=2, n_blocks=1).collect()
+        },
+        "semantic_dedup": lambda df: {
+            tuple(r) for r in semantic_dedup(
+                df, dim=4, n_clusters=1, threshold=0.9
+            ).collect()
+        },
+    }
+    # the documented behaviour per (operator, bad kind); "drop" means
+    # the output equals the clean corpus' output plus, for
+    # semantic_dedup, the bad row as a kept singleton
+    contract = {
+        "blocked_pair_cosine": {
+            "NULL": "raise", "ragged": "raise",
+            "null element": "raise", "zero-norm": "no match",
+        },
+        "lsh_blocked_cosine_pairs": {
+            "NULL": "drop", "ragged": "drop",
+            "null element": "raise", "zero-norm": "no match",
+        },
+        "knn_join": {
+            "NULL": "drop", "ragged": "drop",
+            "null element": "drop", "zero-norm": "scores 0",
+        },
+        "semantic_dedup": {
+            "NULL": "drop", "ragged": "drop",
+            "null element": "drop", "zero-norm": "drop",
+        },
+    }
+    for op, run in ops.items():
+        want_clean = run(spark.createDataFrame(clean, schema))
+        assert want_clean, op
+        for kind, vec in bad_kinds.items():
+            df = spark.createDataFrame(clean + [(9, vec)], schema)
+            rule = contract[op][kind]
+            if rule == "raise":
+                with pytest.raises(Exception, match=kind):
+                    run(df)
+                continue
+            got = run(df)
+            if op == "semantic_dedup":
+                # NULL / ragged rows get a NULL cluster from ivf_index
+                cluster = None if kind in ("NULL", "ragged") else 0
+                assert got == want_clean | {(9, cluster, 9, True)}, kind
+            elif rule == "scores 0":
+                # the zero vector ranks with cosine 0 on both sides
+                assert {r for r in got if 9 not in (r[0], r[2])} <= want_clean
+                assert all(r[3] == 0.0 for r in got if 9 in (r[0], r[2]))
+                assert sum(r[0] == 9 for r in got) == 2, got
+            else:
+                assert got == want_clean, (op, kind, got)
 
 
 def test_env_bool_normalizes_and_rejects(monkeypatch):

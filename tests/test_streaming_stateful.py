@@ -104,6 +104,99 @@ def test_single_data_batch_drain_emits_everything(spark, dup_events_dir):
     assert got["event_id"].is_unique
 
 
+@pytest.mark.parametrize("shape", ["append_window", "outer_interval_join"])
+def test_single_data_batch_refuses_ineligible_shape(spark, shape):
+    """single_data_batch is checked, not trusted: an append-mode window
+    and an outer interval join emit their rows only after the watermark
+    advances — in a batch after batch 0 — so stopping at batch 0 would
+    silently truncate the sink. The drain must raise instead."""
+    from vinum_spark.streaming import tumbling_counts
+
+    src = "/root/testdata/sf0.001/events.parquet"
+    ev = stream_events(spark, src, nanos_ts=True)
+    if shape == "append_window":
+        stream = tumbling_counts(ev)
+    else:
+        side = {
+            s: ev.filter(F.col("event_type") == t)
+            .withWatermark("ts", "2 hours")
+            .select(*[F.col(c).alias(f"{s}_{c}") for c in ev.columns])
+            for s, t in (("l", "click"), ("r", "purchase"))
+        }
+        stream = side["l"].join(
+            side["r"],
+            (F.col("l_user_id") == F.col("r_user_id"))
+            & (F.col("r_ts") >= F.col("l_ts"))
+            & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
+            "left_outer",
+        )
+    with pytest.raises(ValueError, match="watermark advances"):
+        run_stream_to_memory(
+            stream, f"sdb_bad_{shape}", mode="append", single_data_batch=True
+        )
+
+
+class _FakeGroupState:
+    """Just enough of GroupState to drive a state function directly,
+    with a processing-time clock the test controls."""
+
+    def __init__(self, now_ms, value=None):
+        self.now_ms, self.value = now_ms, value
+        self.hasTimedOut = False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def getCurrentProcessingTimeMs(self):
+        return self.now_ms
+
+    def update(self, value):
+        self.value = value
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+    def remove(self):
+        self.value = None
+
+
+def test_stream_distinct_bucketed_evicts_after_timeout():
+    """group_buckets keeps the per-group inactivity timeout: a group
+    quiet for more than timeout_ms on Spark's batch clock has its
+    seen-set evicted, so a later duplicate is re-admitted; within the
+    timeout the duplicate stays suppressed. The clock is the state's
+    processing time, not the executor's wall clock."""
+    import pandas as pd
+
+    from vinum_spark.streaming.stateful import _bucket_dedup_fn
+
+    fn = _bucket_dedup_fn("user_id", ["event_id"], ["user_id", "event_id"], 1000)
+    batch = pd.DataFrame({"user_id": [7, 8], "event_id": [1, 1]})
+
+    def run(state, pdf):
+        return sum(len(o) for o in fn((0,), iter([pdf]), state))
+
+    state = _FakeGroupState(now_ms=10_000)
+    assert run(state, batch) == 2
+    assert list(state.value[1]) == [10_000, 10_000]  # clocks, never garbage
+    # group 8 stays active at t=10.8 s; group 7 goes quiet
+    state.now_ms = 10_800
+    assert run(state, batch.iloc[[1]]) == 0
+    # t=11.5 s: group 7 was quiet 1.5 s > 1 s and is evicted; group 8
+    # (last seen 0.7 s ago) still suppresses its duplicate
+    state.now_ms = 11_500
+    assert run(state, batch) == 1
+    assert sorted(state.value[0]) == sorted(
+        pd.util.hash_pandas_object(batch[["user_id"]], index=False)
+        .to_numpy().view("int64").tolist()
+    )
+
+
 def test_dedup_within_watermark_stream_matches_batch(spark, dup_events_dir):
     """Built-in dropDuplicatesWithinWatermark twin: the doubled source
     deduped on event_id must reproduce the single-copy counts (the

@@ -5,13 +5,15 @@
 Runs, in order, and exits nonzero on the first failing stage:
 
 1. the full pytest suite (``python -m pytest tests/ -x -q``);
-2. EVERY ``queries()`` entry (``len(queries())`` — 90+ and growing)
+2. the benchmark harness's own tests (``python3 -m pytest
+   perfbench/tests -q`` — generator, stats and checks; no Spark);
+3. EVERY ``queries()`` entry (``len(queries())`` — 90+ and growing)
    against its DuckDB oracle at the given scale factor
    (``tools/check_oracle.py`` — the same check the round driver
    applies to its 50-row subset, extended to every query, including
    the entries the driver record rotates out; see README
    "driver-gate rotation");
-3. with ``--bench``: ``python bench.py --all`` at sf0.1 followed by the
+4. with ``--bench``: ``python bench.py --all`` at sf0.1 followed by the
    ``tools/bench_diff.py --gate`` drift check against the recorded
    anchors in ``tools/bench_history.jsonl``.
 """
@@ -39,6 +41,7 @@ def main() -> None:
     if "--sf-dir" in args:
         sf_dir = args[args.index("--sf-dir") + 1]
     run("tests", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"])
+    run("perfbench tests", [sys.executable, "-m", "pytest", "perfbench/tests", "-q"])
     run("gate rotation hygiene", [sys.executable, "tools/check_gate_coverage.py"])
     run("oracles (full inventory)", [sys.executable, "tools/check_oracle.py", sf_dir])
     if "--bench" in args:

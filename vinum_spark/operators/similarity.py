@@ -298,23 +298,17 @@ def blocked_pair_cosine(
     family can prune without losing recall, and this blocked exact plan
     is the right one.
 
-    The per-bucket kernel is an Arrow-batched ``applyInPandas`` matmul:
-    a dense O(n²) dot-product sweep is BLAS territory — one
-    ``A @ B.T`` per block pair replaces millions of per-pair expression
-    evaluations, and only pairs ≥ threshold ever materialize as rows
-    (measured ~10× faster than enumerating the pairs as a JVM join at
-    sf0.1; the join shape also shuffles every PAIR, this shape shuffles
-    every ROW ×n_blocks). This is the documented carve-out where built-in
+    Each bucket runs :func:`_gram_kernel`: one BLAS ``A @ B.T`` per
+    block pair replaces millions of per-pair expression evaluations,
+    and only pairs ≥ threshold ever materialize as rows (measured ~10×
+    faster than enumerating the pairs as a JVM join at sf0.1; the join
+    shape also shuffles every PAIR, this shape shuffles every ROW
+    ×n_blocks). This is the documented carve-out where built-in
     expressions genuinely can't express the computation efficiently.
 
-    Round-18: the kernel moved from ``applyInPandas`` to ``applyInArrow``
-    — the embedding column arrives as an Arrow list array whose values
-    buffer reshapes zero-copy into the (n, dim) BLAS operand, replacing
-    the per-row ``np.stack`` over a pandas object column (one Python
-    object + small ndarray per row). Same float ops in the same order —
-    results bit-identical; measured 579 → 476 ms on the q39 bench query
-    at sf0.1, with the win growing with rows-per-block since the removed
-    cost was per-row.
+    Vector contract (README "Embedding vector contract"): a NULL,
+    ragged or element-NULL vector fails the batch with ``ValueError``;
+    a zero-norm vector matches nothing.
     """
     v = F.col(vec_col)
     base = df.select(
@@ -341,110 +335,162 @@ def blocked_pair_cosine(
         F.lit("b").alias("__side"),
     )
     replicated = a_copies.unionByName(b_copies)
-    return replicated.groupBy("__pa", "__pb").applyInArrow(
-        _pair_cosine_kernel(threshold), schema="id_a long, id_b long, cosine double"
+    schema = "id_a long, id_b long, cosine double"
+    kernel = _gram_kernel(
+        "pairs", schema, threshold=threshold, who="blocked_pair_cosine",
+        invalid="raise",
     )
+    return replicated.groupBy("__pa", "__pb").applyInArrow(kernel, schema)
 
 
-def _pair_cosine_kernel(threshold: float, dim: int | None = None):
-    """The block-pair cosine Arrow kernel shared by
-    :func:`blocked_pair_cosine` and :func:`lsh_blocked_cosine_pairs`:
-    one group = one block pair (side-``a`` rows × side-``b`` rows; a
-    diagonal block — ``__pa == __pb`` — holds each row once and
-    enumerates its upper triangle). One BLAS matmul per group replaces
-    per-pair expression evaluation; only pairs ≥ ``threshold`` ever
-    materialize as rows, as ``(id_a, id_b, cosine)`` with
-    ``id_a < id_b``. When the caller knows ``dim`` it is enforced
-    exactly (``len(values) == n_rows × dim``); without it the kernel
-    can only check divisibility, which misses offsetting errors (one
-    row short + one row long)."""
-    thr = float(threshold)
-    want_dim = int(dim) if dim else None
+#: Row-block height of the Gram product: a block's scores hold
+#: ``_GRAM_BLOCK × |B|`` doubles, however large the group.
+_GRAM_BLOCK = 4096
+
+
+def _gram_kernel(
+    emit: str,
+    schema: str,
+    invalid: str,
+    who: str,
+    threshold: float = 0.0,
+    k: int = 0,
+    dim: Optional[int] = None,
+):
+    """The one grouped cosine kernel (``applyInArrow``) behind
+    :func:`blocked_pair_cosine`, :func:`lsh_blocked_cosine_pairs`,
+    :func:`knn_join` and :func:`semantic_dedup`. A group holds ``__id``
+    and ``__v`` (list of float); ``__side`` "a"/"b" splits it into
+    sides A and B, unless it has no ``__side`` or ``__pa == __pb``
+    (diagonal: A = B = every row). In order, the kernel
+
+    1. validates the vectors and 2. normalises each row once
+       (:func:`_unit_rows`; ``invalid`` is the caller's "raise" or
+       "drop" for bad rows, ``who`` names it in errors);
+    3. multiplies ``A @ B.T`` in row blocks of ``_GRAM_BLOCK``;
+    4. emits ``"pairs"`` — cosine ≥ ``threshold`` as ``(min id, max id,
+       cosine)``, only the upper triangle of a diagonal group, zero-norm
+       rows never matching — or ``"topk"`` — each A row's ``k`` best B
+       rows as ``(A id, B id, cosine)`` in :func:`cosine_topk`'s order,
+       zero-norm rows scoring 0 — into the columns ``schema`` names (a
+       two-column schema drops the cosine)."""
+    thr, want_dim = float(threshold), int(dim) if dim else None
+    out = [field.split()[0] for field in schema.split(",")]
 
     def _kernel(tbl):
-        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        empty = pa.table(
-            {
-                "id_a": pa.array([], "int64"),
-                "id_b": pa.array([], "int64"),
-                "cosine": pa.array([], "float64"),
-            }
-        )
-        n = tbl.num_rows
-        if n == 0:
-            return empty
-        pa_col = tbl.column("__pa").to_numpy(zero_copy_only=False)
-        pb_col = tbl.column("__pb").to_numpy(zero_copy_only=False)
-        side = tbl.column("__side").to_numpy(zero_copy_only=False)
-        ids = tbl.column("__id").to_numpy(zero_copy_only=False)
-        vcol = tbl.column("__v")
-        if isinstance(vcol, pa.ChunkedArray):
-            vcol = vcol.combine_chunks()
-        # list array -> contiguous values buffer -> (n, dim) view.
-        # flatten() (not .values) so a sliced/offset array reads the
-        # right window; fixed dim is the operator's documented contract
-        # — and it is VALIDATED here (round-19 ADVICE): a null or
-        # ragged embedding shifts every subsequent row's window, and
-        # when the truncated length happens to divide evenly the
-        # reshape would silently misalign all downstream cosines.
-        if vcol.null_count:
-            raise ValueError(
-                "blocked pair cosine requires non-null fixed-dimension "
-                f"vectors; got {vcol.null_count} null(s) in a batch"
+        cols = ([], [], [])
+        if tbl.num_rows:
+            valid, unit, nz = _unit_rows(tbl.column("__v"), want_dim, invalid, who)
+            ids = tbl.column("__id").to_numpy()[valid]
+            names = tbl.column_names
+            diagonal = "__side" not in names or (
+                "__pa" in names
+                and tbl.column("__pa")[0].as_py() == tbl.column("__pb")[0].as_py()
             )
-        flat_arr = vcol.flatten()
-        # element-level nulls survive the top-level check and would
-        # otherwise convert to NaN silently, poisoning every cosine in
-        # the block with a NaN that drops pairs instead of raising
-        if flat_arr.null_count:
-            raise ValueError(
-                "blocked pair cosine requires non-null vector elements; "
-                f"got {flat_arr.null_count} null element(s) in a batch"
-            )
-        flat = np.asarray(flat_arr)
-        # per-ROW length check (not just the total): offsetting ragged
-        # rows (one short + one long) keep the total divisible — and
-        # even equal to n*dim — while every row after the first bad one
-        # reads a shifted window
-        lens = pa.compute.list_value_length(vcol)
-        lo_hi = pa.compute.min_max(lens)
-        lo, hi = lo_hi["min"].as_py(), lo_hi["max"].as_py()
-        if lo != hi or (want_dim is not None and hi != want_dim):
-            raise ValueError(
-                "blocked pair cosine requires fixed "
-                f"{want_dim if want_dim is not None else 'same'}"
-                f"-dimension vectors; got row lengths in [{lo}, {hi}] "
-                f"over {n} rows (ragged or wrong-dim input)"
-            )
-        row_dim = want_dim if want_dim is not None else len(flat) // n
-        vecs = flat.reshape(n, row_dim)
-        diagonal = pa_col[0] == pb_col[0]
-        amask = np.ones(n, bool) if diagonal else side == "a"
-        bmask = np.ones(n, bool) if diagonal else side == "b"
-        va, vb = vecs[amask], vecs[bmask]
-        ids_a, ids_b = ids[amask], ids[bmask]
-        if len(va) == 0 or len(vb) == 0:
-            return empty
-        sims = (va @ vb.T) / np.outer(
-            np.linalg.norm(va, axis=1), np.linalg.norm(vb, axis=1)
-        )
-        if diagonal:
-            ii, jj = np.nonzero(np.triu(sims >= thr, k=1))
-        else:
-            ii, jj = np.nonzero(sims >= thr)
-        lo = np.minimum(ids_a[ii], ids_b[jj])
-        hi = np.maximum(ids_a[ii], ids_b[jj])
-        return pa.table(
-            {
-                "id_a": pa.array(lo, "int64"),
-                "id_b": pa.array(hi, "int64"),
-                "cosine": pa.array(sims[ii, jj], "float64"),
-            }
-        )
+            if diagonal:
+                a = b = np.ones(len(ids), bool)
+            else:
+                a = pc.equal(tbl.column("__side"), "a").to_numpy()[valid]
+                b = ~a
+            ids_a, ua, nz_a = ids[a], unit[a], nz[a]
+            ids_b, ub, nz_b = ids[b], unit[b], nz[b]
+            if emit == "topk" and len(ids_b):
+                # integer sort key over the 6dp-rounded cosine with id
+                # tiebreak, so local pruning can never drop the
+                # id-tiebroken winner. np.rint before the cast: a bare
+                # astype truncates toward zero, and ~1% of x*1e6 products
+                # land at k.999... in binary, which would collapse
+                # adjacent 6dp keys that F.round (half-up) ranks apart.
+                # The tiebreak is the ids' RANK within the group (< group
+                # size), so arbitrary 64-bit ids can't bleed into the
+                # cosine bits or overflow the key.
+                id_rank = np.empty(len(ids_b), dtype="int64")
+                id_rank[np.argsort(ids_b, kind="stable")] = np.arange(len(ids_b))
+                kk = min(k, len(ids_b))
+            for i0 in range(0, len(ids_a) if len(ids_b) else 0, _GRAM_BLOCK):
+                g = ua[i0 : i0 + _GRAM_BLOCK] @ ub.T
+                if emit == "topk":
+                    key = (
+                        np.rint(np.round(g, 6) * 1e6).astype("int64") * (1 << 40)
+                        - id_rank[None, :]
+                    )
+                    idx = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
+                    hits = (
+                        np.repeat(ids_a[i0 : i0 + _GRAM_BLOCK], kk),
+                        ids_b[idx.ravel()],
+                        np.take_along_axis(g, idx, axis=1).ravel(),
+                    )
+                else:
+                    hit = (g >= thr) & nz_a[i0 : i0 + _GRAM_BLOCK, None] & nz_b
+                    if diagonal:  # row r is row i0 + r: keep columns > i0 + r
+                        hit = np.triu(hit, k=i0 + 1)
+                    ii, jj = np.nonzero(hit)
+                    hits = (
+                        np.minimum(ids_a[i0 + ii], ids_b[jj]),
+                        np.maximum(ids_a[i0 + ii], ids_b[jj]),
+                        g[ii, jj],
+                    )
+                for c, h in zip(cols, hits):
+                    c.append(h)
+        arrays = [
+            pa.array(np.concatenate(c) if c else np.empty(0, t), t)
+            for c, t in zip(cols, ("int64", "int64", "float64"))
+        ]
+        return pa.table(dict(zip(out, arrays)))
 
     return _kernel
+
+
+def _unit_rows(vcol, dim: Optional[int], invalid: str, who: str):
+    """Validate + normalise an Arrow list column. A row is invalid if
+    NULL, holding a NULL element, or not ``dim`` long (the modal
+    non-NULL length if ``dim`` is None). Returns the validity mask, the
+    valid rows divided by their norms as an (n, dim) float64 matrix
+    (zero-norm rows stay zero), and their nonzero-norm mask."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(vcol, pa.ChunkedArray):
+        vcol = vcol.combine_chunks()
+    n = len(vcol)
+    lens = pc.list_value_length(vcol).fill_null(-1).to_numpy()
+    # flatten() honours the slice offset and skips NULL rows' slots, so
+    # the non-NULL rows' values sit back to back in row order
+    flat, sizes = vcol.flatten(), np.maximum(lens, 0)
+    elem_null = np.zeros(n, bool)
+    if flat.null_count:
+        owner = np.repeat(np.arange(n), sizes)
+        elem_null[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = True
+    if dim is None:
+        present = lens[lens >= 0]
+        dim = int(np.bincount(present).argmax()) if len(present) else 0
+    valid = (lens == dim) & ~elem_null
+    if invalid == "raise" and not valid.all():
+        problems = {
+            "NULL": (lens < 0).sum(),
+            f"ragged (length != {dim})": ((lens >= 0) & (lens != dim)).sum(),
+            "null element": elem_null.sum(),
+        }
+        raise ValueError(
+            f"{who} requires non-null fixed-dimension vectors; a batch of "
+            f"{n} rows holds "
+            + ", ".join(f"{c} {p}" for p, c in problems.items() if c)
+            + " row(s)"
+        )
+    vals = flat.to_numpy(zero_copy_only=False).astype("float64", copy=False)
+    if valid.all():
+        mat = vals.reshape(n, dim)
+    else:
+        starts = np.cumsum(sizes) - sizes
+        mat = vals[starts[valid][:, None] + np.arange(dim)]
+    norms = np.linalg.norm(mat, axis=1)
+    nonzero = norms > 0
+    unit = np.zeros_like(mat)
+    np.divide(mat, norms[:, None], out=unit, where=nonzero[:, None])
+    return valid, unit, nonzero
 
 
 def _lsh_bucket_frame(
@@ -636,11 +682,11 @@ def lsh_blocked_cosine_pairs(
     Returns ``(id_a, id_b, cosine)`` with ``id_a < id_b`` and
     ``cosine ≥ threshold`` — the verified near-dup pairs.
 
-    Why (round 19, guide §2.3/§2.5/§4.2): the two-operator pipeline
-    enumerates every bucket-co-membership as a JOIN ROW — at sf0.1 the
-    q83 corpus makes 8.5M random 4-bit-key collisions for ~1250 true
-    pairs — then pays a ``distinct`` Exchange over all of them and two
-    more joins to re-attach vectors for the exact verify. Here each
+    Why: the two-operator pipeline enumerates every
+    bucket-co-membership as a JOIN ROW — at sf0.1 the q83 corpus makes
+    8.5M random 4-bit-key collisions for ~1250 true pairs — then pays
+    a ``distinct`` Exchange over all of them and two more joins to
+    re-attach vectors for the exact verify. Here each
     ``(band, key)`` bucket is split into ``ceil(|bucket|/block_rows)``
     deterministic sub-blocks (``pmod(xxhash64(id), nb)`` — the
     :func:`blocked_pair_cosine` grid applied within buckets); every
@@ -656,19 +702,23 @@ def lsh_blocked_cosine_pairs(
     may differ across blocks, so the copies can differ in the last ulp
     — ``max`` is deterministic where ``distinct`` would not be).
 
-    Exactness note: the verify decision is the same float contract as
-    :func:`blocked_pair_cosine` (float64 BLAS dot / norm product).
+    Exactness note: the verify decision is :func:`_gram_kernel`'s float
+    contract, shared with :func:`blocked_pair_cosine` (float64 rows
+    normalised once, then the BLAS Gram product).
     Versus ``cosine_verify``'s JVM fold it can differ at the last ulp,
     which matters only for pairs razor-thin at ``threshold`` or at a
     rounding boundary of a rounded declared output. Callers that only
     keep the pair set (q83/q85, twins at cos≈0.999 vs non-dups ≤0.73)
     adopt this path unconditionally; a caller whose DECLARED output
     includes the cosine value must gate the switch on measured
-    equality — q56 (declares ``round(cosine, 4)``) was switched only
-    after its round-4 output was verified EXACTLY equal to the
-    expression path's at sf0.001/0.01/0.1 (the fixed deterministic
-    harness corpora); a caller needing bit-identity to the JVM fold on
-    arbitrary data should stay on :func:`cosine_verify`.
+    equality — q56 (declares ``round(cosine, 4)``) uses it because its
+    rounded output is EXACTLY equal to the expression path's at
+    sf0.001/0.01/0.1 (the fixed deterministic harness corpora); a
+    caller needing bit-identity to the JVM fold on arbitrary data
+    should stay on :func:`cosine_verify`. Bad vectors (README
+    "Embedding vector contract"): NULL and ragged vectors get a NULL
+    signature and drop out, element-NULL vectors raise, zero-norm
+    vectors match nothing.
 
     100 TB shape: signatures and banding are map-side; the groupBy
     Exchange shuffles each row ``n_bands × nb`` times carrying
@@ -745,9 +795,13 @@ def lsh_blocked_cosine_pairs(
     ).select(
         "__id", "__v", "band", "key", "__bp.__pa", "__bp.__pb", "__bp.__side"
     )
+    schema = "id_a long, id_b long, cosine double"
+    kernel = _gram_kernel(
+        "pairs", schema, threshold=threshold, dim=dim,
+        who="lsh_blocked_cosine_pairs", invalid="raise",
+    )
     hits = replicated.groupBy("band", "key", "__pa", "__pb").applyInArrow(
-        _pair_cosine_kernel(threshold, dim),
-        schema="id_a long, id_b long, cosine double",
+        kernel, schema
     )
     return hits.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
 
@@ -1000,12 +1054,13 @@ def knn_join(
     shuffles ``|Q| × n_blocks × k`` candidate rows — bounded, never
     |Q|×|C|. Pick ``n_blocks`` ≈ cluster cores (it is also the
     parallelism). No broadcast of either table, no
-    BroadcastNestedLoopJoin, no cartesian. Wrong-length vectors are
-    dropped inside the kernel (never crash the batch), matching the
-    LSH/IVF/PQ null contracts.
-    """
-    import pandas as pd
+    BroadcastNestedLoopJoin, no cartesian.
 
+    Vector contract (README "Embedding vector contract"): a NULL or
+    element-NULL vector, or one whose length differs from its block's
+    modal length, is dropped rather than failing the batch — matching
+    the LSH/IVF/PQ null contracts. A zero-norm vector scores cosine 0.
+    """
     if k < 1 or n_blocks < 1:
         raise ValueError(f"k and n_blocks must be >= 1, got k={k} n_blocks={n_blocks}")
     # the long cast below is lossless only for integral id columns; a
@@ -1027,7 +1082,7 @@ def knn_join(
         )
         .filter(F.col("__v").isNotNull())
         .withColumn("__cblk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
-        .withColumn("__is_q", F.lit(1))
+        .withColumn("__side", F.lit("a"))
     )
     c_side = (
         corpus.select(
@@ -1038,49 +1093,16 @@ def knn_join(
         .withColumn(
             "__cblk", F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks)).cast("int")
         )
-        .withColumn("__is_q", F.lit(0))
+        .withColumn("__side", F.lit("b"))
     )
     tagged = q_side.unionByName(c_side)
 
-    out_schema = "query_id long, vec_id long, cosine double"
-
-    def _bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        lens = pdf["__v"].map(len)
-        dim = int(lens.mode().iloc[0]) if len(lens) else 0
-        pdf = pdf[lens == dim]  # drop wrong-length rows, don't crash
-        qs = pdf[pdf["__is_q"] == 1]
-        cs = pdf[pdf["__is_q"] == 0]
-        if qs.empty or cs.empty:
-            return pd.DataFrame({"query_id": [], "vec_id": [], "cosine": []})
-        qm = np.stack([np.asarray(v, dtype="float64") for v in qs["__v"]])
-        cm = np.stack([np.asarray(v, dtype="float64") for v in cs["__v"]])
-        qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-        cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-        sims = qn @ cn.T  # |q| x |c| raw cosines (output rounds these ONCE)
-        ids = cs["__id"].to_numpy()
-        # integer sort key over the 6dp-rounded cosine (cosine_topk's
-        # ranking contract) with id tiebreak, so local pruning can never
-        # drop the id-tiebroken winner. np.rint before the cast: a bare
-        # astype truncates toward zero, and ~1% of x*1e6 products land
-        # at k.999... in binary, which would collapse adjacent 6dp keys
-        # that F.round (half-up) ranks apart. The tiebreak uses the ids'
-        # RANK within the block (only relative order matters), which is
-        # < block size, so arbitrary 64-bit ids can't bleed into the
-        # cosine bits or overflow the combined key.
-        id_rank = np.empty(len(ids), dtype="int64")
-        id_rank[np.argsort(ids, kind="stable")] = np.arange(len(ids))
-        key = (
-            np.rint(np.round(sims, 6) * 1e6).astype("int64") * (1 << 40)
-            - id_rank[None, :]
-        )
-        kk = min(k, key.shape[1])
-        idx = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
-        rows_q = np.repeat(qs["__id"].to_numpy(), kk)
-        rows_c = ids[idx.ravel()]
-        rows_s = np.take_along_axis(sims, idx, axis=1).ravel()
-        return pd.DataFrame({"query_id": rows_q, "vec_id": rows_c, "cosine": rows_s})
-
-    local = tagged.groupBy("__cblk").applyInPandas(_bucket_topk, out_schema)
+    schema = "query_id long, vec_id long, cosine double"
+    kernel = _gram_kernel(
+        "topk", schema, k=k, who="knn_join",
+        invalid="drop",  # a row off the block's modal length leaves the ranking
+    )
+    local = tagged.groupBy("__cblk").applyInArrow(kernel, schema)
     # rank on the 6dp key; the DISPLAYED cosine rounds the raw value
     # once (ranking on 6dp then re-rounding to 4dp would double-round)
     w = Window.partitionBy("query_id").orderBy(
@@ -1307,60 +1329,19 @@ def _semantic_edges(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    dim: Optional[int] = None,
 ) -> DataFrame:
-    """Within-cluster cosine edges for :func:`semantic_dedup` — a
-    per-cluster BLAS Gram kernel (``applyInPandas`` grouped on
-    ``sem_cluster``): ONE hash Exchange on the cluster id, then each
-    cluster normalizes its rows once and matmuls itself in row blocks
-    of 4096 (memory ≤ block × |cluster| doubles). NULL-cluster rows
-    (NULL / wrong-length vectors) are excluded up front; zero-norm
-    rows never match — the NaN-comparison exclusion of the retired
-    pair-expression kernel, preserved exactly. Returns ``(id_a,
-    id_b)`` with ``id_a < id_b``."""
-    import pandas as pd
-
-    thr = float(threshold)
-    blk = 4096
-
-    def _cluster_edges(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["__id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        mat = np.stack(
-            [
-                np.asarray(v, dtype="float64")
-                for v in pdf["__v"].to_numpy()[order]
-            ]
-        )
-        nrm = np.linalg.norm(mat, axis=1)
-        ok = nrm > 0
-        matn = np.zeros_like(mat)
-        matn[ok] = mat[ok] / nrm[ok, None]
-        out_a, out_b = [], []
-        n = len(ids)
-        for i0 in range(0, n, blk):
-            g = matn[i0 : min(i0 + blk, n)] @ matn.T
-            ii, jj = np.nonzero(g >= thr)
-            gi = ii + i0
-            # upper triangle in sorted-id order -> id_a < id_b
-            keep = (jj > gi) & ok[gi] & ok[jj]
-            out_a.append(ids[gi[keep]])
-            out_b.append(ids[jj[keep]])
-        return pd.DataFrame(
-            {
-                "id_a": (
-                    np.concatenate(out_a)
-                    if out_a
-                    else np.array([], dtype="int64")
-                ),
-                "id_b": (
-                    np.concatenate(out_b)
-                    if out_b
-                    else np.array([], dtype="int64")
-                ),
-            }
-        )
-
+    """Within-cluster cosine edges for :func:`semantic_dedup`: ONE hash
+    Exchange on ``sem_cluster``, then :func:`_gram_kernel` takes each
+    cluster's upper triangle. NULL-cluster rows (NULL / wrong-length
+    vectors) are excluded up front; a row with a NULL element is
+    dropped in the kernel and zero-norm rows never match, so both come
+    back as kept singletons. Returns ``(id_a, id_b)`` with
+    ``id_a < id_b``."""
+    kernel = _gram_kernel(
+        "pairs", "id_a long, id_b long", threshold=threshold, dim=dim,
+        who="semantic_dedup", invalid="drop",
+    )
     return (
         cells.filter(F.col("sem_cluster").isNotNull())
         .select(
@@ -1369,7 +1350,7 @@ def _semantic_edges(
             F.col(vec_col).alias("__v"),
         )
         .groupBy("__c")
-        .applyInPandas(_cluster_edges, "id_a long, id_b long")
+        .applyInArrow(kernel, "id_a long, id_b long")
     )
 
 
@@ -1399,16 +1380,15 @@ def semantic_dedup(
        fixed-centroid argmax (the coarse quantizer the ANN gates
        q46/q79 pin; a production run trains k-means centroids first —
        the assignment path is identical);
-    2. within-cluster pairwise cosine as a per-cluster BLAS Gram
-       kernel (``applyInPandas`` grouped on the cluster id, row-block
-       chunked so memory is bounded at ``block × |cluster|`` — the
-       :func:`blocked_pair_cosine` trade applied cluster-locally).
-       The first shipped kernel was a self-join with a per-pair
-       expression dot; measured at the 200k-row anchor it spent
-       ~14 µs/pair (the 192-term Get/cast chain per candidate pair,
-       norms recomputed per pair) and the 100× anchor ran into the
-       hours — the Gram matmul does the identical arithmetic at
-       memory bandwidth, turning ~10⁸ pairs into a few GFLOP;
+    2. within-cluster pairwise cosine by :func:`_gram_kernel`
+       grouped on the cluster id (row-block chunked, so memory is
+       bounded at ``block × |cluster|`` — the
+       :func:`blocked_pair_cosine` trade applied cluster-locally). A
+       per-pair expression dot self-join measured ~14 µs/pair at the
+       200k-row anchor (a 192-term Get/cast chain per candidate pair,
+       norms recomputed per pair); the Gram matmul does the identical
+       arithmetic at memory bandwidth, turning ~10⁸ pairs into a few
+       GFLOP;
     3. pairs ≥ ``threshold`` are edges; connected components
        (operators/dedup.py — the q63-gated min-label propagation)
        label duplicate GROUPS, and the min-id member survives. (The
@@ -1426,9 +1406,10 @@ def semantic_dedup(
     cluster-bounded BLAS, CC is edges-proportional — the corpus never
     meets itself across clusters. NULL or wrong-length vectors get a
     NULL cluster from :func:`ivf_index`, are excluded from the kernel,
-    and come back as kept singletons — never silently dropped.
-    Zero-norm vectors match nothing (the expression kernel's NaN
-    comparison semantics, preserved exactly).
+    and come back as kept singletons — never silently dropped. So do
+    vectors with a NULL element (dropped in the kernel) and zero-norm
+    vectors (they match nothing); see README "Embedding vector
+    contract".
 
     ``n_clusters`` is the scale knob. DEFAULT (``None``) auto-selects
     ~sqrt(corpus count) (:func:`semantic_n_clusters`), so within-cluster
@@ -1482,7 +1463,7 @@ def semantic_dedup(
     else:
         cells = assigned.localCheckpoint(eager=True)
 
-    edges = _semantic_edges(cells, threshold, vec_col, id_col)
+    edges = _semantic_edges(cells, threshold, vec_col, id_col, dim)
     comp = connected_components(edges)
     return (
         cells.select(id_col, "sem_cluster")

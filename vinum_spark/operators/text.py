@@ -1227,6 +1227,23 @@ def _merge_rows(merges_df: DataFrame) -> list:
     return list(rows)
 
 
+def _byte_level_ids(merges: list) -> dict:
+    """Token -> id in the :func:`bpe_vocab` GPT-2 layout: base symbol
+    ``chr(0x100 + b)`` is id b, and the k-th merge product (0-based, so
+    ``merge_rank`` k + 1) is id 256 + k. Raises if two merges mint the
+    same product string: the dict would silently give them one id."""
+    tok_id = {
+        **{chr(_BYTE_SYM_BASE + b): b for b in range(256)},
+        **{a + b: 256 + k for k, (a, b) in enumerate(merges)},
+    }
+    if len(tok_id) != 256 + len(merges):
+        raise ValueError(
+            f"emit_ids: {256 + len(merges) - len(tok_id)} merge "
+            "product(s) collide; token ids would not be unique"
+        )
+    return tok_id
+
+
 def _stash_vocab_rows(df: DataFrame, entries: list) -> DataFrame:
     """Carry driver-local ``(token, token_id[, is_special])`` vocab
     entries on the frame for bounded consumers (coverage checks,
@@ -1605,9 +1622,10 @@ def bpe_tokenize(
     ``token_ids array<int>`` in the :func:`bpe_vocab` GPT-2 layout —
     equal to :func:`bpe_encode_ids` on this function's output (pinned
     in tests) but computed in the SAME corpus pass: the id of base
-    symbol b is b and of merge k is 255 + k, so the id array is a
-    vocab-side dict lookup and the per-doc reassembly carries both
-    arrays through the one explode + join + groupBy cycle.
+    symbol b is b and of the k-th merge (0-based, i.e. ``merge_rank``
+    k + 1) is 256 + k, so the id array is a vocab-side dict lookup and
+    the per-doc reassembly carries both arrays through the one
+    explode + join + groupBy cycle. Colliding merge products raise.
     Composed consumers (tokenize → ids → chunk/pack) previously paid
     ``bpe_encode_ids``'s second full corpus explode + join + groupBy
     for information the vocabulary already determined (round 19,
@@ -1645,10 +1663,7 @@ def bpe_tokenize(
         F.posexplode(words_col).alias("__wi", "word"),
     )
     if emit_ids:
-        tok_id = {
-            **{chr(_BYTE_SYM_BASE + b): b for b in range(256)},
-            **{a + b: 256 + k for k, (a, b) in enumerate(merges)},
-        }
+        tok_id = _byte_level_ids(merges)
 
         # vocab-sized work: one id array per DISTINCT word (every
         # token is in-vocab by construction — byte-level has no OOV)
@@ -2858,9 +2873,9 @@ def bpe_tokenize_map_side(
     pipeline composition needs no join-back; ``emit_ids=True`` (byte mode
     only) adds ``token_ids array<int>`` in the :func:`bpe_vocab`
     GPT-2 layout — equal to :func:`bpe_encode_ids` but computed in the
-    same projection (the id of base symbol b is b, of merge k is
-    255 + k; no join needed), so a streaming ingestion pipeline can
-    land model-ready id sequences directly.
+    same projection (the id of base symbol b is b, of the k-th merge
+    (0-based) is 256 + k; no join needed), so a streaming ingestion
+    pipeline can land model-ready id sequences directly.
     """
     import re as _re
 
@@ -2916,10 +2931,7 @@ def bpe_tokenize_map_side(
                 f"{'...' if len(missing) == 5 else ''}"
             )
     else:
-        tok_id = {
-            **{chr(_BYTE_SYM_BASE + b): b for b in range(256)},
-            **{a + b: 256 + k for k, (a, b) in enumerate(merges)},
-        }
+        tok_id = _byte_level_ids(merges)
         if append_eos:
             tok_id[eos_token] = 256 + len(merges)
     ranks = {pair: i for i, pair in enumerate(merges)}

@@ -76,8 +76,9 @@ def stream_distinct(
     inactivity exceeded ``timeout_ms`` — the same trigger-granularity
     observable behavior as the per-group timeout, whose firing is also
     only visible when a later duplicate is re-admitted. Per-group
-    clocks use the executor's wall clock rather than Spark's batch
-    clock; the difference is bounded by one trigger interval.
+    clocks read Spark's batch processing time
+    (``GroupState.getCurrentProcessingTimeMs``), the clock the
+    per-group timeout itself runs on.
 
     Restart constraint: seen-key digests come from
     ``pd.util.hash_pandas_object`` (vectorized; stable across runs,
@@ -177,17 +178,45 @@ def _stream_distinct_bucketed(
             f"group_buckets must be >= 1, got {group_buckets}"
         )
     schema = df.schema
-    out_cols = [f.name for f in schema.fields]
+    timeout = (
+        GroupStateTimeout.ProcessingTimeTimeout
+        if timeout_ms > 0
+        else GroupStateTimeout.NoTimeout
+    )
+    bucket = F.pmod(F.xxhash64(F.col(group_col)), F.lit(group_buckets))
+    return (
+        df.withColumn("__bucket", bucket)
+        .groupBy("__bucket")
+        .applyInPandasWithState(
+            _bucket_dedup_fn(
+                group_col, key_list, [f.name for f in schema.fields],
+                timeout_ms,
+            ),
+            outputStructType=schema,
+            stateStructType=(
+                "groups array<long>, last_seen array<long>, "
+                "digs array<long>, dig_group array<long>"
+            ),
+            outputMode="append",
+            timeoutConf=timeout,
+        )
+    )
+
+
+def _bucket_dedup_fn(
+    group_col: str, key_list: List[str], out_cols: List[str], timeout_ms: int
+):
+    """The per-bucket state function of :func:`_stream_distinct_bucketed`.
+    Group clocks read the batch's processing time from ``state``, so
+    every bucket in a batch ages its groups against the same instant."""
     dig_cols = [group_col] + key_list
 
     def dedup_bucket(
         key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import time as _time
-
         import numpy as np
 
-        now_ms = int(_time.time() * 1000)
+        now_ms = state.getCurrentProcessingTimeMs()
         if state.hasTimedOut:
             # the bucket-level timeout fires only after the WHOLE bucket
             # was quiet for timeout_ms, so every member group's own
@@ -238,7 +267,7 @@ def _stream_distinct_bucketed(
             new = present[~np.isin(present, groups)]
             groups = np.concatenate([groups, new])
             last_seen = np.concatenate(
-                [last_seen, np.empty(len(new), dtype="int64")]
+                [last_seen, np.full(len(new), now_ms, dtype="int64")]
             )
             last_seen[np.isin(groups, present)] = now_ms
         state.update(
@@ -252,26 +281,7 @@ def _stream_distinct_bucketed(
         if timeout_ms > 0:
             state.setTimeoutDuration(timeout_ms)
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    bucket = F.pmod(F.xxhash64(F.col(group_col)), F.lit(group_buckets))
-    return (
-        df.withColumn("__bucket", bucket)
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            dedup_bucket,
-            outputStructType=schema,
-            stateStructType=(
-                "groups array<long>, last_seen array<long>, "
-                "digs array<long>, dig_group array<long>"
-            ),
-            outputMode="append",
-            timeoutConf=timeout,
-        )
-    )
+    return dedup_bucket
 
 
 def run_stream_dedup_against_store(

@@ -15,6 +15,7 @@ map-side before state updates.
 
 from __future__ import annotations
 
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -326,6 +327,12 @@ def _drain(
     drain latency when nothing can be emitted. (``status.
     isDataAvailable`` is NOT used as the signal: it blips false
     transiently between DATA batches, so it cannot prove exhaustion.)
+
+    The assertion is checked, never trusted silently: at batch 0 the
+    executed plan must hold no operator that emits only when the
+    watermark advances (an append-mode aggregate, or an outer stream
+    join), and a later batch that carries input rows means the input
+    did not land in batch 0. Either raises ``ValueError``.
     """
     import time
 
@@ -334,7 +341,19 @@ def _drain(
         while q.isActive:
             lp = q.lastProgress
             if lp is not None and single_data_batch:
-                break  # batch 0 committed == everything committed
+                if lp["batchId"] == 0:
+                    _check_single_batch_plan(q, name)
+                    break  # batch 0 committed == everything committed
+                late = [
+                    p for p in q.recentProgress
+                    if p["batchId"] > 0 and p["numInputRows"] > 0
+                ]
+                if late:
+                    raise ValueError(
+                        f"stream {name!r}: single_data_batch asserted, but "
+                        f"batch {late[0]['batchId']} carried "
+                        f"{late[0]['numInputRows']} input rows"
+                    )
             if lp is not None and lp["numInputRows"] == 0 and lp["batchId"] > 0:
                 break
             if time.monotonic() > deadline:
@@ -348,6 +367,29 @@ def _drain(
             raise exc
     finally:
         q.stop()
+
+
+#: Physical operators that emit rows only when the watermark advances,
+#: i.e. in a batch AFTER the one that read their input.
+_WATERMARK_EMITTERS = re.compile(
+    r"^[\s:+\-*()\d]*(?P<op>"
+    r"(?:SessionWindow)?StateStoreSave .*\bAppend\b"
+    r"|StreamingSymmetricHashJoin .*\b(?:Left|Right|Full)Outer\b)",
+    re.M,
+)
+
+
+def _check_single_batch_plan(q, name: str) -> None:
+    """Raise if ``q``'s executed plan can emit after batch 0 — the
+    structural half of the ``single_data_batch`` assertion."""
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    hit = _WATERMARK_EMITTERS.search(plan)
+    if hit:
+        raise ValueError(
+            f"stream {name!r}: single_data_batch asserted, but the plan "
+            "emits rows only after the watermark advances "
+            f"({hit.group('op').split(' ')[0]}); drain without it"
+        )
 
 
 def run_stream_to_memory(
