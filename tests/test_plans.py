@@ -8,6 +8,8 @@ aggregation, top-k fusion, and whole-stage codegen coverage.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from vinum_spark.inventory import QUERIES
@@ -239,7 +241,11 @@ def test_minhash_candidates_no_inferred_shingle_filter(spark):
 def test_minhash_partial_aggregates(spark):
     # q29's final plan starts from the checkpointed candidate set, so
     # assert the map-side combine on the candidate pipeline itself
-    from vinum_spark.operators.dedup import minhash_candidate_pairs
+    from vinum_spark.operators.dedup import (
+        _shingle_frame,
+        minhash_candidate_pairs,
+        simhash_candidate_pairs,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     df = minhash_candidate_pairs(docs, n_hashes=64, bands=16)
@@ -247,6 +253,35 @@ def test_minhash_partial_aggregates(spark):
         df._jdf.queryExecution(), "formatted"
     )
     assert "partial_min" in plan  # map-side combine before the shuffle
+
+    # Both signature frames are hash-repartitioned on doc_id to
+    # defaultParallelism ABOVE their aggregate: AQE coalesces the
+    # byte-tiny aggregate to 1-2 partitions, and the band self-join's
+    # pair enumeration would run on them. The shingles come in
+    # checkpointed (the q29/q30/q63 shape), so the aggregate has its own
+    # shuffle; shuffle partitions are set apart from defaultParallelism
+    # so that shuffle cannot make the repartition redundant.
+    dp = spark.sparkContext.defaultParallelism
+    spread = re.compile(
+        rf"Exchange hashpartitioning\(doc_id#\d+L, {dp}\), REPARTITION_BY_NUM"
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(dp + 1))
+    try:
+        sh = _shingle_frame(docs, "text", "doc_id", 3).localCheckpoint(eager=False)
+        for op, agg in (
+            (minhash_candidate_pairs, "functions=[min("),
+            (simhash_candidate_pairs, "Scan ExistingRDD"),
+        ):
+            cands = op(docs, shingles=sh)
+            plan = cands._sc._jvm.PythonSQLUtils.explainString(
+                cands._jdf.queryExecution(), "simple"
+            )
+            m = spread.search(plan)
+            assert m, (op.__name__, plan)
+            assert m.start() < plan.index(agg), (op.__name__, plan)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_semi_join_planned(spark):

@@ -637,17 +637,38 @@ def test_env_bool_normalizes_and_rejects(monkeypatch):
     assert _env_bool("SPARK_GRAFT_PREFER_SORT_MERGE_JOIN", "false") == "false"
 
 
-def test_spread_probe_cache_is_session_scoped(spark):
-    """Round-19 review: the _spread partition-probe memo must live on
-    the session object (dying with it), not in a module-level dict
-    keyed on id(session) that can serve a stale estimate to a new
-    session reusing the id."""
+def test_spread_passes_streaming_frame_through(spark, tmp_path):
+    """A streaming frame has no RDD to count partitions on, so _spread
+    returns it unchanged; every other planning error propagates."""
     from vinum_spark.operators import dedup as D
 
-    assert not hasattr(D, "_SPREAD_PROBE_CACHE"), (
-        "module-level spread-probe cache is back"
-    )
-    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    D._spread(df, "doc_id").collect()
-    cache = getattr(spark, D._SPREAD_PROBE_CACHE_ATTR, None)
-    assert cache, "probe memo did not land on the session object"
+    src = tmp_path / "docs"
+    spark.createDataFrame(
+        [(1, "a")], "doc_id long, text string"
+    ).write.parquet(str(src))
+    sdf = spark.readStream.schema("doc_id long, text string").parquet(str(src))
+    assert D._spread(sdf, "doc_id") is sdf
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_dedup", "minhash_candidate_pairs"])
+def test_minhash_build_starts_no_spark_job(spark, op):
+    """Building the MinHash operators plans no driver-side job: the
+    signature aggregate is repartitioned directly instead of having its
+    partition count read, which under AQE ran the shingle+minhash stage
+    as a separate job. Each operator gets a freshly checkpointed frame
+    so no plan is shared with an earlier call."""
+    from vinum_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 7} jumps over dog {i}") for i in range(64)],
+        "doc_id long, text string",
+    ).localCheckpoint()
+    sc = spark.sparkContext
+    group = f"test-build-{op}"
+    sc.setJobGroup(group, op)
+    try:
+        getattr(D, op)(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -6261,6 +6261,13 @@ _GATE_HEAD = (
     # pinned; extraction family keeps q25/q69), q41 null semantics
     # (three-valued-logic shapes run in the golden suite and the
     # null-heavy seated joins q17/q33).
+    #
+    # Round-20 rotation (touched ⇒ seated): the signature frames of the
+    # MinHash/SimHash operators now repartition directly, which every
+    # dedup-cluster query runs; q63 dedup_clusters was the one touched
+    # query without a seat and now holds one. Outgoing: q35 percentiles
+    # (untouched, fresh r19 row valid through the window to r24; the
+    # aggregate family keeps q01/q22/q47/q48 seated).
     "q01_pricing_summary",
     "q07_orderby_limit_offset",
     "q17_scalar_subquery",
@@ -6268,7 +6275,6 @@ _GATE_HEAD = (
     "q22_count_distinct",
     "q28_ngram_jaccard",
     "q30_simhash",
-    "q35_percentiles",
     "q47_grouping_sets",
     "q24_events_sessionize",
     "q29_minhash_lsh_dedup",
@@ -6293,6 +6299,7 @@ _GATE_HEAD = (
     # inside incoming q89/q93 and the seated q105/q106 chains)
     "q25_text_stats",
     "q56_embedding_lsh_verify",
+    "q63_dedup_clusters",
     "q64_repetition_signals",
     "q65_pipeline_compose",
     "q67_vocab_topk",

@@ -46,8 +46,8 @@ def _estimated_scan_partitions(df: DataFrame) -> Optional[int]:
     metadata only — no plan-to-RDD conversion (``df.rdd`` plans the whole
     query on the driver per call; this reads the already-cached file
     index). Returns None when the estimate can't be made (non-file-backed
-    plan, or files on a store we can't stat) — callers should then trust
-    the upstream partitioning.
+    plan, or files on a store we can't stat); :func:`_spread` then reads
+    the frame's RDD partition count instead.
 
     Known divergence from Spark's real split planning: Spark packs
     multiple small files into one partition (``openCostInBytes`` bin
@@ -89,70 +89,31 @@ def _estimated_scan_partitions(df: DataFrame) -> Optional[int]:
     return total
 
 
-# _spread's probe memo lives AS AN ATTRIBUTE ON the session object
-# (round-19, same fix as inventory._t / streaming footer probes: a
-# module-level dict keyed on id(session) survives the session and can
-# serve a stale partition estimate to a NEW session whose id() reuses
-# the old one — exactly the kind of under-partitioning this helper
-# exists to prevent). The per-session dict dies with its session;
-# bounded below. Keyed by analyzed-plan semanticHash.
-_SPREAD_PROBE_CACHE_ATTR = "_vinum_spread_probe_cache"
-
-
-def _spread(df: DataFrame, key: str, probe_key=None) -> DataFrame:
+def _spread(df: DataFrame, key: str) -> DataFrame:
     """Ensure enough partitions for the CPU-heavy map stage that follows.
 
     A single small parquet file scans as one partition, serializing
     shingling/hashing on one core. When the input's split count is below
-    the cluster's parallelism, hash-repartition the (small) doc rows by
-    key — cheap relative to the 10-100× parallelism it unlocks. Inputs
+    half the cluster's parallelism, hash-repartition the (small) doc rows
+    by key — cheap relative to the 10-100× parallelism it unlocks. Inputs
     already well-partitioned (the 100 TB case: many files, or big files
     that split by ``maxPartitionBytes``) pass through untouched.
 
     The split count comes from file-listing metadata when the frame is a
-    local file scan (no job planning); otherwise — in-memory frames
-    (e.g. ``createDataFrame`` ingestion, which coalesces to 1 partition),
-    remote stores we can't stat — fall back to an ``rdd.getNumPartitions``
-    probe, which plans the query on the driver (and under AQE can
-    execute upstream shuffle stages to finalize the plan — several
-    hundred ms of driver wall). The probe is memoized per (session,
-    analyzed-plan semanticHash) so a frame reused across operators
-    (e.g. minhash candidates + verify on the same documents) pays for
-    one planning pass, not one per call.
-
-    ``probe_key``: a hashable memo key to use INSTEAD of the frame's
-    own semanticHash (round 19). A frame derived from a
-    ``localCheckpoint`` embeds the checkpoint's fresh RDD id in its
-    plan, so its semanticHash never repeats across runs and the memo
-    misses every time — the probe (and the checkpoint materialization
-    it forces) lands on every run's driver wall. Callers that derive
-    the frame deterministically from a stable parent pass a key built
-    from the PARENT plan's semanticHash plus the derivation parameters;
-    the first run probes, every later run in the session reuses the
-    measured count.
+    local file scan; otherwise (in-memory ``createDataFrame`` frames,
+    checkpointed frames, remote stores) from ``rdd.getNumPartitions()``,
+    which starts no Spark job on an exchange-free frame. Under AQE a
+    frame with a shuffle below it would run that stage as a separate
+    driver job, so the signature aggregates (:func:`_band_buckets`,
+    :func:`simhash_candidate_pairs`) repartition directly instead of
+    coming here. A streaming frame has no RDD and passes through.
     """
+    if df.isStreaming:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     est = _estimated_scan_partitions(df)
     if est is None:
-        try:
-            session = df.sparkSession
-            cache = getattr(session, _SPREAD_PROBE_CACHE_ATTR, None)
-            if cache is None:
-                cache = {}
-                setattr(session, _SPREAD_PROBE_CACHE_ATTR, cache)
-            fp = (
-                probe_key
-                if probe_key is not None
-                else df._jdf.queryExecution().analyzed().semanticHash()
-            )
-            est = cache.get(fp)
-            if est is None:
-                est = df.rdd.getNumPartitions()
-                if len(cache) >= 512:  # bound driver memory
-                    cache.clear()
-                cache[fp] = est
-        except Exception:
-            return df
+        est = df.rdd.getNumPartitions()
     if est < max(target // 2, 2):
         return df.repartition(target, key)
     return df
@@ -176,23 +137,6 @@ def _shingles(col: Column, n: int) -> Column:
         lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
     )
     return F.array_distinct(grams)
-
-
-def _stable_probe_key(parent: DataFrame, *tag):
-    """Run-stable :func:`_spread` memo key: the PARENT plan's
-    semanticHash plus the derivation parameters. The parent is the
-    frame the probed one is deterministically derived from BEFORE any
-    ``localCheckpoint`` — a checkpoint embeds a fresh RDD id in the
-    plan, so the checkpointed frame's own semanticHash never repeats
-    across runs and the probe memo misses every time. The parent
-    (typically the memoized table scan) keeps one analyzed plan per
-    session, so this is one cheap JVM call. Returns None (caller falls
-    back to the probed frame's own hash) when the parent cannot be
-    analyzed."""
-    try:
-        return (parent._jdf.queryExecution().analyzed().semanticHash(), *tag)
-    except Exception:
-        return None
 
 
 def _shingle_frame(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -335,23 +279,25 @@ def _band_buckets(
     bands: int,
     rows_per_band: int,
     sig_col: str = "minhash",
-    probe_key=None,
 ) -> DataFrame:
     """Explode a signature into (id, band, band_hash) bucket rows.
 
-    The input is spread first (round 19): a signature frame is a
-    byte-tiny aggregate output that AQE coalesces to 1-2 partitions,
-    and the band self-join every consumer builds on these buckets
-    streams its bucket-pair enumeration over THIS partitioning —
-    measured q29 1.0 s → 0.65 s at sf0.1 from this line alone (the
-    same bytes-≠-work coalescing trap as the r18 q83 revert and this
-    round's simhash fix). Repartitioning ~(8 B + signature) rows is
-    noise at any scale. ``probe_key``: see :func:`_spread` — callers
-    whose signature frame derives from a checkpointed shingle frame
-    pass a run-stable key so the partition probe (which executes the
-    upstream stages under AQE) runs once per session, not once per
-    plan construction."""
-    df = _spread(df, id_col, probe_key=probe_key)
+    The signature frame is hash-repartitioned to ``defaultParallelism``
+    first: it is a byte-tiny aggregate output that AQE coalesces to 1-2
+    partitions, and the band self-join every consumer builds on these
+    buckets streams its bucket-pair enumeration over THIS partitioning —
+    measured q29 1.0 s → 0.65 s at sf0.1 from this line alone (the same
+    bytes-≠-work coalescing trap as the r18 q83 revert). Repartitioning
+    ~(8 B + signature) rows is noise at any scale. The repartition is
+    unconditional rather than a :func:`_spread` decision because reading
+    an aggregate's partition count under AQE runs the whole
+    shingle+minhash stage as a separate driver job. The one trade: where
+    AQE leaves the aggregate at ≥ defaultParallelism/2 partitions this
+    is one exchange of the signature rows that a partition-count check
+    would have skipped (measured on 4 cores: the 5 000-document sf0.1
+    test corpus gets there, the 500-document sf0.01 corpus and the
+    benchmark corpora do not)."""
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
     band = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     with_band = df.select(F.col(id_col), F.col(sig_col), band)
     band_slice = F.slice(
@@ -385,16 +331,7 @@ def minhash_candidate_pairs(
     sigs = _signatures_only(
         df, text_col, id_col, n_hashes, shingle_size, shingles=shingles
     )
-    # a provided shingle frame is checkpointed by contract, so the sig
-    # frame's own plan hash is run-unique — key the partition probe on
-    # the stable corpus frame instead (one probe per session)
-    probe_key = (
-        _stable_probe_key(df, "mh_band_spread", n_hashes, shingle_size)
-        if shingles is not None
-        else None
-    )
-    buckets = _band_buckets(sigs, id_col, bands, rows_per_band,
-                            probe_key=probe_key)
+    buckets = _band_buckets(sigs, id_col, bands, rows_per_band)
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
         a.join(
@@ -655,32 +592,31 @@ def simhash_candidate_pairs(
     ``bit_count(xor)``. The band join is an equi-join; pair enumeration
     is quadratic only within a band bucket. ``shingles``: a precomputed
     :func:`_shingle_frame` to reuse (see :func:`_simhash_only`).
+
+    The (id, simhash) frame is hash-repartitioned to
+    ``defaultParallelism`` unconditionally, for the reason given in
+    :func:`_band_buckets` and with the same trade: where AQE leaves the
+    aggregate at ≥ defaultParallelism/2 partitions this is one exchange
+    a partition-count check would have skipped.
     """
     # Lazy-checkpoint the (id, simhash) frame: the band self-join below
     # plans as a broadcast join whose build and stream sides are the
     # SAME subtree, and without a lineage cut Spark computes the whole
     # signature pipeline twice (no exchange to reuse under a broadcast).
     # The persisted frame is one (long, long) row per doc — bounded at
-    # any scale; lazy, so no extra job barrier (round-18). THEN spread:
-    # the signature frame is a byte-tiny aggregate output that AQE
-    # coalesces to 1-2 partitions, and the broadcast self-join's
-    # quadratic within-bucket pair enumeration streams over THIS
-    # partitioning — at sf0.1 that serialized ~12.7M pair evaluations
-    # onto 2 cores (measured: the enumeration stage was 2.1 s of q30's
-    # 2.4 s; the same bytes-≠-work trap as r18's q83 coalescing
-    # revert). Repartitioning ~16 B/doc rows is noise at any scale.
-    h = _spread(
-        _simhash_only(
-            df, text_col, id_col, shingle_size=shingle_size,
-            shingles=shingles,
-        ).localCheckpoint(eager=False),
-        id_col,
-        # the checkpoint makes this frame's plan hash run-unique; key
-        # the partition probe on the stable corpus frame instead
-        probe_key=_stable_probe_key(
-            df, "simhash_spread", shingle_size, band_bits
-        ),
-    )
+    # any scale; lazy, so no extra job barrier (round-18).
+    sigs = _simhash_only(
+        df, text_col, id_col, shingle_size=shingle_size, shingles=shingles
+    ).localCheckpoint(eager=False)
+    # THEN repartition to defaultParallelism: the signature frame is a
+    # byte-tiny aggregate output that AQE coalesces to 1-2 partitions,
+    # and the broadcast self-join's quadratic within-bucket pair
+    # enumeration streams over THIS partitioning — at sf0.1 that
+    # serialized ~12.7M pair evaluations onto 2 cores (measured: the
+    # enumeration stage was 2.1 s of q30's 2.4 s; the same bytes-≠-work
+    # trap as r18's q83 coalescing revert). Repartitioning ~16 B/doc
+    # rows is noise at any scale.
+    h = sigs.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     bucket = h.select(
