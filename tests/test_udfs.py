@@ -148,3 +148,20 @@ def test_udf_null_passthrough_matches_reference(spark):
     assert t.sql_pd("select nan_flag_(x) f from t").f.tolist() == [False, True, False]
     register_python("str_of_", lambda s: str(s), "string")
     assert t.sql_pd("select str_of_(s) r from t").r.tolist() == ["a", "None", "c"]
+
+
+def test_numpy_agg_registers_without_deprecation_warning(trips_groupby):
+    """The grouped-agg wrapper's type hints let Spark infer GROUPED_AGG;
+    the deprecated PandasUDFType argument printed a UserWarning."""
+    import warnings
+
+    from vinum_spark import register_numpy_agg
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        register_numpy_agg("spread_nowarn", lambda x: float(np.max(x) - np.min(x)))
+        pdf = trips_groupby.sql_pd(
+            "SELECT vendor_id, spread_nowarn(total) AS s FROM t "
+            "GROUP BY vendor_id ORDER BY vendor_id"
+        )
+    assert pdf["s"].tolist() == pytest.approx([30.97, 130.0, 0.0])

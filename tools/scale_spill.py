@@ -99,10 +99,12 @@ def _constrained_session():
     shuffles cannot fit in memory. UI on: it is the spill-metrics API."""
     from pyspark.sql import SparkSession
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return (
+    from vinum_spark.session import local_executor_confs
+
+    master = "local-cluster[4,2,1536]"
+    builder = (
         SparkSession.builder.appName("spill_anchor")
-        .master("local-cluster[4,2,1536]")
+        .master(master)
         .config("spark.executor.memory", "1536m")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.session.timeZone", "UTC")
@@ -112,9 +114,10 @@ def _constrained_session():
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "true")
-        .config("spark.executorEnv.PYTHONPATH", repo_root)
-        .getOrCreate()
     )
+    for key, value in local_executor_confs(master).items():
+        builder = builder.config(key, value)
+    return builder.getOrCreate()
 
 
 def _stage_metrics(spark) -> dict:

@@ -212,20 +212,7 @@ def run_both() -> None:
     here = os.path.abspath(__file__)
     recs = {}
     for cpus in (32, 8):
-        # Pin BLAS to one thread per Python worker: this harness'
-        # OpenBLAS build (MAX_THREADS=2, NO_AFFINITY) otherwise lets
-        # every worker's matmul use host threads OUTSIDE Spark's task
-        # accounting, so a local[8] run of a BLAS-heavy stage secretly
-        # borrows up to 16 host cores and the 8-vs-32 ratio understates
-        # the real parallelism (measured: lshcos_q83 1.27 unpinned).
-        # Same guidance as a production deployment: one BLAS thread per
-        # executor core, parallelism comes from Spark tasks.
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_CPUS=str(cpus),
-            OPENBLAS_NUM_THREADS="1",
-            OMP_NUM_THREADS="1",
-        )
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
         env.pop("SPARK_GRAFT_MASTER", None)
         out = subprocess.run(
             [sys.executable, here],

@@ -247,18 +247,21 @@ def ensure_udfs_registered(
 
 
 def _make_grouped_agg(fn: Callable, arity: int, dt: T.DataType):
-    """GROUPED_AGG pandas_udf: series-per-group in, scalar out."""
+    """GROUPED_AGG pandas_udf: series-per-group in, scalar out.
+
+    The ``pd.Series`` parameter hints and the non-Series return hint let
+    Spark infer GROUPED_AGG; passing the deprecated
+    ``PandasUDFType.GROUPED_AGG`` prints a UserWarning on every
+    registration."""
     arity = max(arity, 1)
-    params = ", ".join(f"s{i}" for i in range(arity))
+    params = ", ".join(f"s{i}: pd.Series" for i in range(arity))
     to_np = ", ".join(f"s{i}.to_numpy()" for i in range(arity))
     ns = {"pd": pd, "np": np, "_fn": fn}
     exec(
-        f"def _wrapped({params}):\n    return _fn({to_np})\n",
+        f"def _wrapped({params}) -> object:\n    return _fn({to_np})\n",
         ns,
     )
-    from pyspark.sql.functions import PandasUDFType
-
-    return pandas_udf(ns["_wrapped"], returnType=dt, functionType=PandasUDFType.GROUPED_AGG)
+    return pandas_udf(ns["_wrapped"], returnType=dt)
 
 
 def _arity_of(fn: Callable) -> int:

@@ -4,13 +4,14 @@ One shared session per process (the reference is an in-process engine,
 ``/root/reference/vinum/api/table.py:15``; our analogue is one local
 SparkSession). Config targets both local testing (local[N]) and a real
 cluster: everything here is standard public Spark configuration — AQE,
-Arrow exchange, sensible shuffle parallelism — and nothing is
-local-mode-specific except the master URL default.
+Arrow exchange, sensible shuffle parallelism.  What is local-mode-specific
+is the master URL default and :func:`local_executor_confs`.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Dict
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +31,46 @@ def _env_bool(name: str, default: str) -> str:
     if raw in ("false", "0", "no", "off"):
         return "false"
     raise ValueError(f"{name} must be a boolean (got {raw!r})")
+
+
+def local_executor_confs(master: str) -> Dict[str, str]:
+    """Executor confs for a ``local[...]`` or ``local-cluster[...]`` master;
+    empty for any other master.
+
+    - ``PYTHONPATH``: executor-side Python workers must import
+      vinum_spark.  In local[N] they share the driver's sys.path, but
+      under local-cluster[...] (separate executor JVMs, the multi-executor
+      validation harness) they start from the worker env alone.
+    - ``spark.python.daemon.module``: fork the workers from
+      :mod:`vinum_spark.daemon`, which preloads their modules once and
+      spares each task pyspark's per-task import and GC overhead (README
+      "Python workers").  The daemon imports vinum_spark before forking.
+    - ``OPENBLAS_NUM_THREADS`` / ``OMP_NUM_THREADS``: one BLAS thread per
+      Python worker unless the driver's environment says otherwise.  An
+      OpenBLAS build with MAX_THREADS=2 and NO_AFFINITY otherwise lets
+      every worker's matmul use host threads outside Spark's task
+      accounting, so a local[8] run of a BLAS-heavy stage borrowed up to
+      16 host cores (tools/scaling_sanity.py on a 32-core host: lshcos_q83
+      8-vs-32 ratio 1.27 unpinned).  Parallelism comes from Spark tasks.  With the pin, no
+      BLAS thread pool exists in the daemon when it forks.
+
+    On a real cluster none of these apply: the package ships via
+    --py-files, which the executor sets up only after its daemon starts,
+    and builder config takes precedence over spark-submit --conf, so
+    setting them would clobber a user-supplied executor environment.
+    """
+    if not master.startswith("local"):  # local[N] and local-cluster[...]
+        return {}
+    return {
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
+        ),
+        "spark.python.daemon.module": "vinum_spark.daemon",
+        "spark.executorEnv.OPENBLAS_NUM_THREADS": os.environ.get(
+            "OPENBLAS_NUM_THREADS", "1"
+        ),
+        "spark.executorEnv.OMP_NUM_THREADS": os.environ.get("OMP_NUM_THREADS", "1"),
+    }
 
 
 def get_spark(app_name: str = "vinum_spark") -> SparkSession:
@@ -107,15 +148,10 @@ def get_spark(app_name: str = "vinum_spark") -> SparkSession:
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Explicit (it is Spark's default, stated for auditability —
-        # round-19, VERDICT r18 item 9): long multi-query sessions must
-        # reuse Python workers rather than fork per task. The r18 --all
-        # late-query drift (q81 2.6->4.0 s) was re-investigated this
-        # round and did NOT reproduce under controlled predecessors
-        # (q64/q80 fresh == after 63 queries); the drift tracked host
-        # windows, so no Python memory bound is imposed (a low
-        # spark.executor.pyspark.memory rlimit would fail the legit
-        # heavyweight kernels on this 128 GiB harness).
+        # Spark's default, stated because the Python worker cost model
+        # rests on it: a worker serves task after task, so what a worker
+        # pays once (imports, on local masters the daemon's preload; see
+        # local_executor_confs) is paid per worker, not per task.
         .config("spark.python.worker.reuse", "true")
         # Broadcast threshold: TPC-H dims (region/nation/supplier/part at
         # test SFs) should always broadcast; AQE upgrades joins at runtime
@@ -126,20 +162,8 @@ def get_spark(app_name: str = "vinum_spark") -> SparkSession:
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
     )
-    # Executor-side Python workers must import vinum_spark: in local[N]
-    # they share the driver's sys.path, but under local-cluster[...]
-    # (separate executor JVMs — the multi-executor validation harness)
-    # the workers start from the worker env alone. Point them at the
-    # package root — but ONLY for local/local-cluster masters: builder
-    # config takes precedence over spark-submit --conf, so setting it
-    # unconditionally would clobber a user-supplied executor PYTHONPATH
-    # on a real cluster (where the package ships as a wheel/zip via
-    # --py-files and this driver-local path means nothing on workers).
-    if master.startswith("local"):  # local[N] and local-cluster[...]
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        )
+    for key, value in local_executor_confs(master).items():
+        builder = builder.config(key, value)
     if master:
         builder = builder.master(master)
     return builder.getOrCreate()
