@@ -38,7 +38,7 @@ def test_workers_fork_from_preloaded_daemon(spark):
     for frozen, zips, worker_blas in {tuple(json.loads(r.r)) for r in rows}:
         assert frozen > 0  # gc.freeze() ran in the daemon before the fork
         # the daemon keeps only the sys.path-level finders (pyspark.zip,
-        # py4j); the default daemon leaves 16 sub-package finders
+        # py4j); a worker of pyspark's own daemon holds 16
         assert zips <= 3
         assert worker_blas == blas
 

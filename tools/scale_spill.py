@@ -102,7 +102,7 @@ def _constrained_session():
     from vinum_spark.session import local_executor_confs
 
     master = "local-cluster[4,2,1536]"
-    builder = (
+    return (
         SparkSession.builder.appName("spill_anchor")
         .master(master)
         .config("spark.executor.memory", "1536m")
@@ -114,10 +114,9 @@ def _constrained_session():
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "true")
+        .config(map=local_executor_confs(master))
+        .getOrCreate()
     )
-    for key, value in local_executor_confs(master).items():
-        builder = builder.config(key, value)
-    return builder.getOrCreate()
 
 
 def _stage_metrics(spark) -> dict:

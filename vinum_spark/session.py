@@ -43,21 +43,21 @@ def local_executor_confs(master: str) -> Dict[str, str]:
       validation harness) they start from the worker env alone.
     - ``spark.python.daemon.module``: fork the workers from
       :mod:`vinum_spark.daemon`, which preloads their modules once and
-      spares each task pyspark's per-task import and GC overhead (README
-      "Python workers").  The daemon imports vinum_spark before forking.
+      removes two per-task costs of pyspark (README "Python workers").
     - ``OPENBLAS_NUM_THREADS`` / ``OMP_NUM_THREADS``: one BLAS thread per
       Python worker unless the driver's environment says otherwise.  An
       OpenBLAS build with MAX_THREADS=2 and NO_AFFINITY otherwise lets
       every worker's matmul use host threads outside Spark's task
       accounting, so a local[8] run of a BLAS-heavy stage borrowed up to
       16 host cores (tools/scaling_sanity.py on a 32-core host: lshcos_q83
-      8-vs-32 ratio 1.27 unpinned).  Parallelism comes from Spark tasks.  With the pin, no
-      BLAS thread pool exists in the daemon when it forks.
+      8-vs-32 ratio 1.27 unpinned).  Parallelism comes from Spark tasks,
+      and no BLAS thread pool exists in the daemon when it forks.
 
     On a real cluster none of these apply: the package ships via
-    --py-files, which the executor sets up only after its daemon starts,
-    and builder config takes precedence over spark-submit --conf, so
-    setting them would clobber a user-supplied executor environment.
+    --py-files, which a worker may add to its path only inside a task,
+    so the executor's daemon cannot rely on importing vinum_spark; and
+    builder config takes precedence over spark-submit --conf, so setting
+    them would clobber a user-supplied executor environment.
     """
     if not master.startswith("local"):  # local[N] and local-cluster[...]
         return {}
@@ -161,9 +161,8 @@ def get_spark(app_name: str = "vinum_spark") -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
+        .config(map=local_executor_confs(master))
     )
-    for key, value in local_executor_confs(master).items():
-        builder = builder.config(key, value)
     if master:
         builder = builder.master(master)
     return builder.getOrCreate()
